@@ -1,8 +1,10 @@
 package graft.attack
 
 import graft.functions.{Embedder, HashEmbedder, TextHashOps, VectorFunctions => VF}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Embedding-inversion attack as a dataflow — Spark-native rebuild of the
@@ -17,16 +19,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * nondeterministic UDFs are a correctness bug under Spark's execution
  * model, SURVEY.md §4.3.2).
  *
- * Scale shape: each generation is ONE narrow Spark job — candidates are
- * exploded from elites, mutated (seeded, keyed), hash-embedded and
- * cosine-scored in whole-stage codegen, then TakeOrdered'd down to the
- * elite set. The default loop keeps O(pop_size) per-generation state on
- * the driver (the reference's pop=60 operating point); the FRAME loop
- * ([[evolutionarySearchDF]], r14) keeps the population as a per-generation
- * checkpointed DataFrame and breeds from a keyed per-offspring plan
- * ([[breedPlan]]) — identical answers (spec-pinned), pop_size past driver
- * memory. Greedy restarts are embarrassingly parallel: one executor-local
- * hill-climb per restart inside mapPartitions, zero Spark jobs per step.
+ * Scale shape: the default loop ([[evolutionarySearch]]) keeps the
+ * O(pop_size) population on the driver (the reference's pop=60 operating
+ * point) and scores each generation in the JVM — one
+ * [[graft.functions.Embedder.embedBatch]] call, the same cosine as the
+ * codegen column, a (score desc, text asc) cut to the elite set — so the
+ * loop launches no Spark job at all: a generation of 60 short strings is
+ * far below any job's driver constant. The FRAME loop
+ * ([[evolutionarySearchDF]]) keeps the population as a per-generation
+ * checkpointed DataFrame scored by the codegen plan and breeds from a
+ * keyed per-offspring plan ([[breedPlan]]) — identical answers
+ * (spec-pinned), pop_size past driver memory. Greedy restarts are
+ * embarrassingly parallel: one executor-local hill-climb per restart
+ * inside mapPartitions, one collect for all restarts.
  */
 object Inversion {
 
@@ -137,10 +142,9 @@ object Inversion {
   def tokenize(s: String): Array[String] =
     tokenizeU(s).map(_.toString)
 
-  private def tokenizeU(s: String): Array[org.apache.spark.unsafe.types.UTF8String] =
-    TextHashOps.tokenize(org.apache.spark.unsafe.types.UTF8String.fromString(s))
-      .toArray[org.apache.spark.unsafe.types.UTF8String](
-        org.apache.spark.sql.types.StringType)
+  private def tokenizeU(s: String): Array[UTF8String] =
+    TextHashOps.tokenize(UTF8String.fromString(s))
+      .toArray[UTF8String](org.apache.spark.sql.types.StringType)
 
   def embedText(s: String, dim: Int): Array[Float] =
     TextHashOps.hashEmbed(tokenizeU(s), dim)
@@ -203,26 +207,48 @@ object Inversion {
                                crossSeed: Long, mutSeed: Long): String =
     mutate(b.fold(a)(bb => crossover(a, bb, crossSeed)), mutSeed)
 
-  /** One generation scored: candidates -> (text, score), descending. The
-    * embed stage goes through the pluggable [[graft.functions.Embedder]]
-    * seam (hash kernel by default; a real model via BatchedModelEmbedder —
-    * either way the scoring plan is the same narrow map + cosine). */
+  /** A population frame scored: (text, score). The embed stage goes
+    * through the pluggable [[graft.functions.Embedder]] seam (hash kernel
+    * by default; a real model via BatchedModelEmbedder — either way the
+    * scoring plan is the same narrow map + cosine). */
   private def scoreFrame(cands: DataFrame, target: Array[Float],
                          embedder: Embedder): DataFrame =
     embedder.embed(cands, "text", "emb")
       .withColumn("score", VF.cosine(col("emb"), typedlit(target)))
       .select("text", "score")
 
-  private def scoreGeneration(spark: SparkSession, cands: Seq[String],
-                              target: Array[Float], embedder: Embedder): DataFrame = {
-    import spark.implicits._
-    scoreFrame(cands.toDF("text"), target, embedder)
+  /** Spark's `orderBy(desc("score"), asc("text"))` order: scores compare
+    * under SQL semantics (-0.0 == 0.0, NaN == NaN and above every number),
+    * texts by their UTF-8 bytes — `String.compareTo` orders UTF-16 code
+    * units, which differs for supplementary and some BMP characters. */
+  private val EliteOrder: Ordering[(UTF8String, Double)] = (x, y) => {
+    val c = SQLOrderingUtil.compareDoubles(y._2, x._2)
+    if (c != 0) c else x._1.binaryCompare(y._1)
+  }
+
+  /** One generation scored in the JVM: the first `nElite` candidates by
+    * (score desc, text asc) — the rows [[scoreFrame]] + orderBy + limit
+    * would collect, bit for bit ([[cosine]] is the codegen column's
+    * arithmetic; the embedder's driver path is its column's kernel). */
+  private[graft] def eliteCut(cands: Seq[String], target: Array[Float],
+                               embedder: Embedder, nElite: Int): Seq[Candidate] = {
+    val vecs = embedder.embedBatch(cands)
+    require(vecs.length == cands.length, "embedBatch must return one vector per text")
+    cands.lazyZip(vecs).map { (t, v) =>
+      // the codegen cosine refuses mismatched widths the same way
+      require(v.length == target.length,
+        s"cosine_sim: vector dims differ (${v.length} vs ${target.length})")
+      (UTF8String.fromString(t), cosine(v, target))
+    }.sorted(EliteOrder).take(nElite)
+      .map { case (t, s) => Candidate(t.toString, s) }
   }
 
   /** Evolutionary attack loop. Returns (deduped per-generation bests,
     * best-score trajectory). Elitism makes the trajectory monotone
     * non-decreasing — the property the reference only eyeballs in its
-    * progress prints (app.py:140-141). */
+    * progress prints (app.py:140-141). Runs entirely on the driver and
+    * launches no Spark job (`spark` is kept for the API's shape):
+    * each generation is scored by [[eliteCut]]. */
   def evolutionarySearch(spark: SparkSession, target: Array[Float], p: Params,
                          embedder: Option[Embedder] = None): (Seq[Candidate], Seq[Double]) = {
     val emb = embedder.getOrElse(HashEmbedder(p.dim))
@@ -232,20 +258,15 @@ object Inversion {
     var gen = 0
     var stop = false
     while (gen < p.generations && !stop) {
-      val elites = scoreGeneration(spark, population, target, emb)
-        .orderBy(desc("score"), asc("text"))
-        .limit(nElite)
-        .collect()
-        .map(r => Candidate(r.getString(0), r.getDouble(1)))
-        .toSeq
+      val elites = eliteCut(population, target, emb, nElite)
       bests += elites.head
       if (elites.head.score > p.earlyStop) stop = true
       else {
         // offspring: crossover pairs of elites (p=.12) then mutate, until
         // pop is refilled (app.py:150-168), each offspring from its KEYED
         // [[breedPlan]] — the same plan the frame loop computes per
-        // executor, so the two loops breed identically. Driver-side
-        // string ops are O(popSize); embed/score stay distributed.
+        // executor, so the two loops breed identically. Breeding and
+        // scoring are both O(popSize) JVM work on the driver.
         population = elites.map(_.text) ++ (nElite until p.popSize).map { i =>
           val (ai, bi, cs, ms) = breedPlan(p.seed, gen, i, nElite, p.crossoverP)
           breedOne(elites(ai).text,

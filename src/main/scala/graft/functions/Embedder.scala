@@ -25,6 +25,12 @@ trait Embedder extends Serializable {
   /** One text — for driver/executor-local loops (the greedy hill-climb
     * embeds one candidate per step, /root/reference/src/app.py:192). */
   def embedOne(text: String): Array[Float]
+
+  /** Many texts in the calling JVM — one vector per text, in order. The
+    * driver loop that scores a whole candidate generation at once (the
+    * inversion attack's evolutionary search) calls this, so a model keeps
+    * its batched encode there; the default embeds one text at a time. */
+  def embedBatch(texts: Seq[String]): Seq[Array[Float]] = texts.map(embedOne)
 }
 
 object Embedder {
@@ -121,6 +127,17 @@ final class BatchedModelEmbedder[M](
 
   override def embedOne(text: String): Array[Float] =
     encodeBatch(model, Seq(text)).head
+
+  /** Encodes in groups of at most `batchSize`, the grouping [[embed]]
+    * uses inside each partition. */
+  override def embedBatch(texts: Seq[String]): Seq[Array[Float]] = {
+    val m = model
+    texts.grouped(batchSize).flatMap { batch =>
+      val vecs = encodeBatch(m, batch)
+      require(vecs.length == batch.length, "encodeBatch must return one vector per text")
+      vecs
+    }.toSeq
+  }
 }
 
 /** REAL-WEIGHTS demo of the [[BatchedModelEmbedder]] seam: the model is a

@@ -66,12 +66,12 @@ object Percolate {
         ph => coalesce(ph, array())).as("phrases"))
   }
 
-  /** Reject profiles with no positive clause, phrases with no terms, and
-    * registries with a duplicated profile_id — two rows sharing an id
-    * would MERGE their clause terms in the (doc, profile) aggregation and
-    * duplicate the broadcast meta join, yielding wrong or duplicated
-    * alert pairs with no error (the stores' requireUniqueKeys discipline,
-    * applied here). Registration-time, tiny jobs over the registry (NOT
+  /** Reject profiles with no positive clause, phrases with no terms, a
+    * NULL profile_id, and registries with a duplicated profile_id — two
+    * rows sharing an id would MERGE their clause terms in the
+    * (doc, profile) aggregation and duplicate the broadcast meta join,
+    * yielding wrong or duplicated alert pairs with no error (the stores'
+    * requireUniqueKeys discipline, applied here). Registration-time, tiny jobs over the registry (NOT
     * per matched batch). */
   def validate(profiles: DataFrame): Unit = {
     // ONE aggregate job computes every violation flag (was three limit(1)
@@ -85,13 +85,20 @@ object Percolate {
         1L).otherwise(0L)), lit(0L)).as("dead"),
       coalesce(sum(when(exists(col("phrases"), ph => size(ph) === 0),
         1L).otherwise(0L)), lit(0L)).as("empty_ph"),
-      (count(lit(1)) - countDistinct(col("profile_id"))).as("dups")).head()
+      // count(col) and countDistinct both skip NULLs, so a NULL id is
+      // refused by its own flag, never counted as a duplicate
+      coalesce(sum(when(col("profile_id").isNull, 1L).otherwise(0L)),
+        lit(0L)).as("null_id"),
+      (count(col("profile_id")) - countDistinct(col("profile_id"))).as("dups")).head()
     require(r.getLong(0) == 0,
       "every profile needs at least one positive (must/any/phrase) clause — " +
         "a pure-negation profile could never fire (a dead subscription)")
     require(r.getLong(1) == 0,
       "a phrase clause needs at least one term")
     require(r.getLong(2) == 0,
+      "profile_id must not be NULL — a NULL id cannot name the profile " +
+        "an alert pair reports")
+    require(r.getLong(3) == 0,
       "profile_id must be unique across the registry — duplicate rows " +
         "would merge their clauses into one unintended profile")
   }

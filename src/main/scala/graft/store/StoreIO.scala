@@ -310,9 +310,10 @@ private[store] object StoreIO {
     * stages (IvfIndex.compact's radii stage reads the just-staged merged
     * parquet), and only the caller knows its writers are independent.
     * The crash-consistency protocol is unchanged — the marker appears only
-    * after EVERY writer returned, and a failure in any writer surfaces
-    * only after all in-flight writers have been awaited (an abandoned
-    * running writer would race session shutdown). */
+    * after EVERY writer returned, and a failure in any writer (or an
+    * interrupt of the calling thread) surfaces only after all in-flight
+    * writers have been awaited (an abandoned running writer would race
+    * session shutdown). */
   def commitStagedParallel(outs: Seq[Staged], marker: String,
                            cleanup: Seq[String] = Seq.empty,
                            maxParallel: Int = 4): Unit = {
@@ -323,13 +324,29 @@ private[store] object StoreIO {
       val futs = outs.map(o => pool.submit(new java.util.concurrent.Callable[Unit] {
         def call(): Unit = runStageWriter(o)
       }))
-      val errs = futs.flatMap(f =>
-        try { f.get(); None }
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            Some(Option(e.getCause).getOrElse(e))
-        })
-      errs.headOption.foreach(e => throw e)
+      // await EVERY writer whatever its get() throws: an interrupt of this
+      // thread is recorded and the same writer awaited again (get()
+      // clears the flag), so no writer outlives the call
+      var first: Option[Throwable] = None
+      var interrupted = false
+      futs.foreach { f =>
+        var done = false
+        while (!done) {
+          try { f.get(); done = true }
+          catch {
+            case e: java.util.concurrent.ExecutionException =>
+              done = true
+              if (first.isEmpty) first = Some(Option(e.getCause).getOrElse(e))
+            case e: InterruptedException =>
+              interrupted = true
+              if (first.isEmpty) first = Some(e)
+          }
+        }
+      }
+      // an interrupt that is not the error thrown stays visible to the caller
+      if (interrupted && !first.exists(_.isInstanceOf[InterruptedException]))
+        Thread.currentThread().interrupt()
+      first.foreach(e => throw e)
     } finally pool.shutdown()
     finishCommit(outs, marker, cleanup)
   }

@@ -124,7 +124,7 @@ class EmbedderSpec extends AnyFunSuite with SparkTest {
 
   test("GRAFT_EMBED_WEIGHTS wires an external artifact (skipped when unset)") {
     import graft.functions.WeightFileEmbedder
-    assume(sys.env.contains(WeightFileEmbedder.EnvVar),
+    assume(sys.env.get(WeightFileEmbedder.EnvVar).isDefined,
       s"${WeightFileEmbedder.EnvVar} not set - hermetic run keeps HashEmbedder")
     val emb = WeightFileEmbedder.fromEnv().get
     val docs = spark.read.parquet(s"$sf001/documents.parquet")

@@ -2,6 +2,8 @@ package graft
 
 import graft.attack.Inversion
 import graft.attack.Inversion.Params
+import graft.functions.BatchedModelEmbedder
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 class InversionSpec extends AnyFunSuite with SparkTest {
@@ -9,6 +11,35 @@ class InversionSpec extends AnyFunSuite with SparkTest {
   private val small = Params(
     popSize = 16, generations = 5, eliteFrac = 0.25,
     restarts = 2, iters = 25, topK = 8, dim = 64, seed = 7L)
+
+  /** Spark jobs `body` launches from this thread, counted by job group.
+    * Listener events arrive in order, so once a later job in a second
+    * group is seen, every job `body` launched has been counted. */
+  private def jobsLaunchedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"inversion-jobs-${System.nanoTime()}"
+    val flush = s"$group-flush"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet(): Unit
+          case Some(`flush`) => flushed.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(flush, "listener flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the flush job's start event never arrived")
+      jobs.get()
+    } finally sc.removeSparkListener(listener)
+  }
 
   test("mutations are pure functions of (text, seed)") {
     assert(Inversion.mutateChar("spark query", 99L) == Inversion.mutateChar("spark query", 99L))
@@ -53,16 +84,68 @@ class InversionSpec extends AnyFunSuite with SparkTest {
   }
 
   test("frame-native evolutionary loop == driver loop generation for generation") {
+    // the driver loop scores in the JVM, the frame loop through Spark's
+    // codegen plan — equality pins the JVM scoring to Spark's, bit for bit,
+    // at the fixture width and at the reference's MiniLM width
+    Seq(64, 384).foreach { dim =>
+      val p = small.copy(dim = dim)
+      val target = Inversion.embedText("spark query vector table join filter", dim)
+      val (cd, td) = Inversion.evolutionarySearch(spark, target, p)
+      val (cf, tf) = Inversion.evolutionarySearchDF(spark, target, p)
+      assert(tf == td, s"dim $dim: the frame loop's best-score trajectory " +
+        "must match the driver loop per generation")
+      assert(cf == cd, s"dim $dim: the deduped per-generation bests must be identical")
+      // early stop fires at the same generation on both loops
+      val quick = p.copy(generations = 8, earlyStop = td.head - 1e-9)
+      assert(Inversion.evolutionarySearchDF(spark, target, quick)._2.length ==
+        Inversion.evolutionarySearch(spark, target, quick)._2.length, s"dim $dim")
+    }
+  }
+
+  test("the driver loop launches no Spark job; invert only the greedy restarts' jobs") {
     val target = Inversion.embedText("spark query vector table join filter", 64)
-    val (cd, td) = Inversion.evolutionarySearch(spark, target, small)
-    val (cf, tf) = Inversion.evolutionarySearchDF(spark, target, small)
-    assert(tf == td,
-      "the frame loop's best-score trajectory must match the driver loop per generation")
-    assert(cf == cd, "the deduped per-generation bests must be identical")
-    // early stop fires at the same generation on both loops
-    val quick = small.copy(generations = 8, earlyStop = td.head - 1e-9)
-    assert(Inversion.evolutionarySearchDF(spark, target, quick)._2.length ==
-      Inversion.evolutionarySearch(spark, target, quick)._2.length)
+    val evo = jobsLaunchedBy(Inversion.evolutionarySearch(spark, target, small): Unit)
+    assert(evo == 0, s"evolutionarySearch launched $evo Spark jobs")
+    val inv = jobsLaunchedBy(Inversion.invert(spark, target, small).collect(): Unit)
+    assert(inv >= 1 && inv <= 2, s"invert launched $inv Spark jobs")
+  }
+
+  test("JVM elite cut orders exactly like Spark's orderBy(desc score, asc text) + limit") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    // equal scores tie-break on text: String.compareTo (UTF-16 units) puts
+    // the emoji (U+D83D...) before fullwidth A (U+FF21); UTF-8 bytes
+    // (F0.. vs EF..) — Spark's order — put it after. A NaN vector scores
+    // NaN, which Spark sorts above every number.
+    val vecs = Map(
+      "\uFF21" -> Array(1f, 0f), "\uD83D\uDE00" -> Array(1f, 0f),
+      "b" -> Array(1f, 0f), "a" -> Array(0f, 1f), "z" -> Array(1f, 1f),
+      "nan" -> Array(Float.NaN, 1f), "zero" -> Array(0f, 0f))
+    val emb = new BatchedModelEmbedder[Unit]("inversion-spec-table", 2, () => (),
+      (_, ts) => ts.map(vecs), batchSize = 3)
+    val target = Array(1f, 0.5f)
+    val texts = vecs.keys.toSeq.sorted
+    val spark6 = emb.embed(texts.toDF("text"), "text", "emb")
+      .withColumn("score", graft.functions.VectorFunctions.cosine(col("emb"), typedlit(target)))
+      .orderBy(desc("score"), asc("text")).limit(6).select("text", "score")
+      .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
+    val jvm6 = Inversion.eliteCut(texts, target, emb, 6).map(c => (c.text, c.score))
+    assert(jvm6.map(_._1) == spark6.map(_._1), s"jvm $jvm6 vs spark $spark6")
+    assert(jvm6.map(_._2).zip(spark6.map(_._2)).forall { case (a, b) =>
+      java.lang.Double.compare(a, b) == 0 })
+    assert(jvm6.head._1 == "nan")
+    assert(jvm6.map(_._1).indexOf("\uFF21") < jvm6.map(_._1).indexOf("\uD83D\uDE00"))
+  }
+
+  test("BatchedModelEmbedder.embedBatch encodes in batchSize groups, in order") {
+    val sizes = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val emb = new BatchedModelEmbedder[Unit]("inversion-spec-batches", 1, () => (),
+      (_, ts) => { sizes += ts.length; ts.map(t => Array(t.length.toFloat)) },
+      batchSize = 4)
+    val texts = (1 to 10).map("x" * _)
+    val out = emb.embedBatch(texts)
+    assert(sizes.toSeq == Seq(4, 4, 2))
+    assert(out.map(_.toSeq) == texts.map(t => Seq(t.length.toFloat)))
   }
 
   test("full invert is reproducible and ranked") {

@@ -827,6 +827,22 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     assert(e.getMessage.contains("unique"), e.getMessage)
   }
 
+  test("percolate refuses a NULL profile_id and a duplicated one, each with its own message") {
+    import spark.implicits._
+    val docs = Seq((1L, "table scan")).toDF("doc_id", "text")
+    def refusal(ids: Seq[java.lang.Long]): String =
+      intercept[IllegalArgumentException](graft.operators.Percolate.matches(docs,
+        ids.map(id => (id, Seq("table"), Seq.empty[String], Seq.empty[String]))
+          .toDF("profile_id", "must", "any", "must_not"))).getMessage
+    // one NULL id is not a duplicate of anything
+    val nullOne = refusal(Seq(null, 1L))
+    assert(nullOne.contains("NULL") && !nullOne.contains("unique"), nullOne)
+    val nullTwo = refusal(Seq(null, null))
+    assert(nullTwo.contains("NULL"), nullTwo)
+    val dup = refusal(Seq(2L, 2L))
+    assert(dup.contains("unique") && !dup.contains("NULL"), dup)
+  }
+
   test("percolate with phrase clauses: stream equals batch; phrase semantics pinned") {
     import spark.implicits._
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")

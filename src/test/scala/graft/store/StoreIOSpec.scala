@@ -115,4 +115,37 @@ class StoreIOSpec extends AnyFunSuite with SparkTest {
     assert(r1.map(_.head) == Seq(1L, 2L, 3L))
     assert(r1.head(1) == "a", "ties order by the payload JSON — lowest wins")
   }
+
+  test("commitStagedParallel awaits every stage writer when the caller is interrupted") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    val base = tmp()
+    val started = new CountDownLatch(2)
+    val release = new CountDownLatch(1)
+    val finished = new AtomicInteger()
+    val outs = Seq("a", "b").map { n =>
+      StoreIO.Staged(s"$base/${n}__stage", s"$base/$n", { _ =>
+        started.countDown()
+        release.await()
+        finished.incrementAndGet(): Unit
+      })
+    }
+    @volatile var thrown: Throwable = null
+    @volatile var finishedAtReturn = -1
+    val caller = new Thread(() =>
+      try StoreIO.commitStagedParallel(outs, s"$base/_commit")
+      catch { case e: Throwable => finishedAtReturn = finished.get(); thrown = e })
+    caller.start()
+    assert(started.await(30, TimeUnit.SECONDS), "stage writers never started")
+    caller.interrupt()
+    caller.join(500)
+    assert(caller.isAlive, "the interrupted commit returned while its writers still ran")
+    release.countDown()
+    caller.join(30000)
+    assert(!caller.isAlive)
+    assert(thrown.isInstanceOf[InterruptedException], s"got $thrown")
+    assert(finishedAtReturn == 2, "every stage writer must finish before the error surfaces")
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$base/_commit")),
+      "an interrupted commit must not publish")
+  }
 }
